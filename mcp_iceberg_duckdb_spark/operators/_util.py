@@ -10,8 +10,7 @@ total order with a unique tiebreak key.
 
 from __future__ import annotations
 
-import os
-
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,110 +27,67 @@ def views(spark: SparkSession, sf_dir: str, *names: str) -> None:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-# (path, size, mtime) -> row-group count; parquet footers are
-# immutable for a given file version, so this never goes stale —
-# bounded FIFO so a long-lived session scanning many table versions
-# cannot grow it without limit (ADVICE r14)
+# (path, fileSize, modificationTime) -> row-group count, keyed by
+# what Spark's PartitionedFile carries; parquet footers are immutable
+# for a given file version, so this never goes stale — bounded FIFO so
+# a long-lived session scanning many table versions cannot grow it
+# without limit
 _RG_CACHE: dict[tuple, int] = {}
 _RG_CACHE_MAX = 4096
 
-# files whose FOOTERS are read per gate decision; beyond this the
-# row-group census is skipped and the estimate is bytes-only
-# (footer reads cost an open+seek each; os.stat is ~free)
+# files whose footers are read per gate decision; beyond this the
+# row-group census is skipped and Spark's planned count stands
 _RG_PROBE_CAP = 64
 
 
-def _size_bytes(v: str) -> int:
-    """Parse a Spark size conf value ("2097152", "134217728b",
-    "128MB", "1g") to bytes."""
-    s = v.strip().lower()
-    mult = 1
-    for suf, m in (
-        ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-        ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1),
-    ):
-        if s.endswith(suf):
-            s, mult = s[: -len(suf)], m
-            break
-    return int(s) * mult
-
-
 def _scan_splits(df: DataFrame) -> int | None:
-    """ESTIMATED usable scan tasks of ``df``'s file source — the
-    planned file-partition count capped by parquet row-group counts.
+    """Usable scan tasks of ``df``: the partitions Spark plans for its
+    file scans, capped per local file by the file's parquet row-group
+    count (a byte split that holds no row group is an empty task).
 
-    Round 15 (ADVICE r14 medium): the previous gate equated raw
-    row-group/file COUNT with achievable parallelism, but Spark sizes
-    file partitions by BYTES — maxSplitBytes = min(maxPartitionBytes,
-    max(openCostInBytes, totalBytes/defaultParallelism)), files packed
-    into splits of that size — so a mid-size many-row-group file (or
-    many tiny files under a large openCost) still scans in 1-2 tasks.
-    The estimate mirrors Spark's FilePartition math: splits =
-    ceil(totalBytesWithOpenCost / maxSplitBytes), capped per file by
-    its row-group count (a split finer than a row group yields empty
-    tasks). None = no file source / non-file scheme / unknowable
-    cheaply — callers treat that as "not splittable" (the safe side:
-    one extra exchange, never a serial stage)."""
+    The partitions come from each FileSourceScanExec of
+    ``sparkPlan()`` — not ``executedPlan()``, which under AQE is one
+    opaque AdaptiveSparkPlanExec leaf. Beyond ``_RG_PROBE_CAP`` files,
+    or for remote files, Spark's count stands. None = some leaf is not
+    a file scan — callers treat that as "not splittable" (the safe
+    side: one extra exchange, never a serial stage)."""
     try:
-        files = df.inputFiles()
-    except Exception:
+        leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+        scans = [leaves.apply(i) for i in range(leaves.size())]
+        if any(
+            s.getClass().getSimpleName() != "FileSourceScanExec" for s in scans
+        ):
+            return None
+        parts = [p for s in scans for p in s.inputRDD().partitions()]
+    except Py4JError:
         return None
-    if not files:
-        return None
-    from urllib.parse import unquote, urlparse
-
-    paths = []
-    for f in files:
-        if "://" in f or f.startswith("file:"):
-            u = urlparse(f)
-            if u.scheme not in ("file", ""):
-                # remote scheme: sizes unknowable without FS calls —
-                # fall through to the safe repartition default
-                return None
-            paths.append(unquote(u.path))
-        else:
-            paths.append(f)
-    sess = df.sparkSession
-    sc = sess.sparkContext
-    try:
-        max_pb = _size_bytes(
-            sess.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-        )
-        open_cost = _size_bytes(
-            sess.conf.get("spark.sql.files.openCostInBytes", "4194304b")
-        )
-        sizes = []
-        keys = []
-        for p in paths:
-            st = os.stat(p)
-            sizes.append(st.st_size)
-            keys.append((p, st.st_size, int(st.st_mtime)))
-    except Exception:
-        return None
-    total = sum(sizes) + open_cost * len(paths)
-    max_split = min(
-        max_pb, max(open_cost, total // max(sc.defaultParallelism, 1))
-    ) or 1
-    # packed partition estimate (many small files share one task)
-    packed = -(-total // max_split)
-    if len(paths) > _RG_PROBE_CAP:
-        # too many footers to probe: bytes-only estimate (production
-        # many-file layouts have row groups proportionate to size)
-        return packed
+    # (path, fileSize, modificationTime) -> planned splits of that file
+    splits: dict[tuple, int] = {}
+    for p in parts:
+        for f in p.files():
+            uri = f.filePath().toUri()
+            if uri.getScheme() != "file":
+                return len(parts)
+            key = (uri.getPath(), f.fileSize(), f.modificationTime())
+            splits[key] = splits.get(key, 0) + 1
+            if len(splits) > _RG_PROBE_CAP:
+                return len(parts)
     import pyarrow.parquet as pq
 
-    per_file = 0
-    for p, size, key in zip(paths, sizes, keys):
-        try:
-            if key not in _RG_CACHE:
-                if len(_RG_CACHE) >= _RG_CACHE_MAX:
-                    _RG_CACHE.pop(next(iter(_RG_CACHE)))
-                _RG_CACHE[key] = pq.ParquetFile(p).metadata.num_row_groups
-            rg = _RG_CACHE[key]
-        except Exception:
-            return None
-        per_file += min(rg, -(-(size + open_cost) // max_split))
-    return min(packed, per_file) if per_file else packed
+    capped = 0
+    for key, n in splits.items():
+        if key not in _RG_CACHE:
+            try:
+                rg = pq.ParquetFile(key[0]).metadata.num_row_groups
+            except (OSError, ValueError):
+                # no parquet footer (csv, orc, ...): Spark's splits stand
+                capped += n
+                continue
+            if len(_RG_CACHE) >= _RG_CACHE_MAX:
+                _RG_CACHE.pop(next(iter(_RG_CACHE)))
+            _RG_CACHE[key] = rg
+        capped += min(_RG_CACHE[key], n)
+    return min(len(parts), capped)
 
 
 def parallelize(df: DataFrame) -> DataFrame:
@@ -140,16 +96,16 @@ def parallelize(df: DataFrame) -> DataFrame:
     scoring, shingle/n-gram expansion).
 
     The gate (guide §2.5 "unsplittable input" / §6 input-split
-    sizing): a parquet scan can split no finer than its row groups,
-    so a small single-row-group fixture file runs every downstream
-    narrow stage in ONE task no matter what maxPartitionBytes says.
-    When the source provides fewer independently-readable units than
-    HALF the default parallelism, round-robin the rows across the
-    cluster; when the input already splits (production: thousands of
-    files/row groups), return the plan UNCHANGED — no exchange, no
-    cost, identical to not calling this at all. Partitioning is thus
-    derived from the input layout, never a constant tuned to either
-    local mode or the cluster."""
+    sizing): the scan runs as many useful tasks as Spark plans
+    partitions for it, capped by parquet row groups, so a small
+    single-row-group fixture file runs every downstream narrow stage
+    in ONE task. When that count is below HALF the default
+    parallelism, round-robin the rows across the cluster; when the
+    input already splits (production: thousands of files/row groups),
+    return the plan UNCHANGED — no exchange, no cost, identical to not
+    calling this at all. Partitioning is thus derived from the input
+    layout, never a constant tuned to either local mode or the
+    cluster."""
     sc = df.sparkSession.sparkContext
     splits = _scan_splits(df)
     if splits is not None and splits * 2 >= sc.defaultParallelism:

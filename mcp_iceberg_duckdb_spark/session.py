@@ -59,14 +59,9 @@ def build_session(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # fixture files are single small parquets; 2 MB splits let a
-        # filter+agg scan use all local cores (3× on TPC-H Q1/Q3 here).
-        # A production deployment reading 100 TB keeps the 128 MB
-        # default — override via SPARK_GRAFT_MAX_PARTITION_BYTES.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(2 * 1024 * 1024)),
-        )
+        # 2 MB splits let a filter+agg scan of a small fixture file use
+        # all local cores (3× on TPC-H Q1/Q3); extra_conf overrides it
+        .config("spark.sql.files.maxPartitionBytes", str(2 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -56,6 +56,7 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir_large):
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             "spark.sql.adaptive.coalescePartitions.enabled",
             "spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.shuffle.partitions",
         )
     }
     try:
@@ -72,6 +73,14 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir_large):
         # forbid broadcast so the join sort-merges and AQE's skew
         # reader has something to split
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        # pinned, not left at the session's core count: AQE compares
+        # COMPRESSED shuffle bytes against factor x the median, and the
+        # hot key's rows compress ~18x better than the cold ones. At 4
+        # partitions the median is taken over 3 cold partitions holding
+        # a third of the cold keys each, and the hot one misses the 2x
+        # factor (185 KB vs a 116 KB median at sf0.1); at 16 it clears
+        # it (133 KB vs 23 KB)
+        conf.set("spark.sql.shuffle.partitions", "16")
         # sf0.1: the hot partition must exceed the byte threshold
         # AFTER shuffle compression, and the upstream repartition(16)
         # gives AQE map-output boundaries to split along — with a
